@@ -1055,18 +1055,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         cfg_part = CrawlConfig(
             strategy="bfs", max_depth=2, max_pages=150, max_supersteps=1,
             scorer=ScorerSpec(kind="freshness", current_year=2024))
-        # one fixed dir per machine, wiped before each run — repeated
-        # probe invocations must not accumulate checkpoint trees in /tmp
-        ckdir = os.path.join(tempfile.gettempdir(), "crawl4ai_resume_probe")
-        shutil.rmtree(ckdir, ignore_errors=True)
-        store = SnapshotStore(ckdir)
-        CrawlEngine(spark, pages, links, cfg_part, store=store).run(seeds)
-        run = CrawlEngine(spark, pages, links, cfg_full,
-                          store=store).run(seeds, resume=True)
-        return run.results.select(
-            "superstep", "seq", "url", "depth", "parent",
-            F.round("score", 6).alias("score"), "success", "status_code",
-        )
+        # a private store per invocation (concurrent probe runs must not
+        # share one); the results read parquet from it lazily, so they are
+        # materialized before the store is removed
+        ckdir = tempfile.mkdtemp(prefix="crawl4ai_resume_probe_")
+        try:
+            store = SnapshotStore(ckdir)
+            CrawlEngine(spark, pages, links, cfg_part, store=store).run(seeds)
+            run = CrawlEngine(spark, pages, links, cfg_full,
+                              store=store).run(seeds, resume=True)
+            return run.results.select(
+                "superstep", "seq", "url", "depth", "parent",
+                F.round("score", 6).alias("score"), "success", "status_code",
+            ).localCheckpoint(eager=True)
+        finally:
+            shutil.rmtree(ckdir, ignore_errors=True)
     q["resume_crawl"] = q_resume_crawl
 
     def q_crawl_metrics(spark, sf):
@@ -4651,13 +4654,13 @@ def oracle_sql() -> dict[str, str]:
             coalesce(string_agg(CASE WHEN line_df < 8 THEN line END,
                                 chr(10) ORDER BY pos), '') AS text_clean,
             count(*) AS n_lines,
-            sum(CASE WHEN line_df < 8 THEN 1 ELSE 0 END) AS n_kept
+            CAST(sum(CASE WHEN line_df < 8 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
           FROM c GROUP BY doc_id)
         SELECT d.doc_id,
           md5(coalesce(agg.text_clean, '')) AS clean_md5,
           length(coalesce(agg.text_clean, '')) AS clean_len,
           coalesce(agg.n_lines, 0) AS n_lines,
-          coalesce(agg.n_kept, 0) AS n_kept
+          CAST(coalesce(agg.n_kept, 0) AS BIGINT) AS n_kept
         FROM d LEFT JOIN agg ON d.doc_id = agg.doc_id
     """
 
@@ -4740,13 +4743,13 @@ def oracle_sql() -> dict[str, str]:
         tc AS (SELECT bucket, count(*) AS ct FROM tf GROUP BY bucket),
         per AS (
           SELECT rf.doc_id, count(*) AS n_feats,
-                 sum(coalesce(tc.ct, 0)) AS tct_sum,
-                 sum(rc.cr) AS rcr_sum
+                 CAST(sum(coalesce(tc.ct, 0)) AS BIGINT) AS tct_sum,
+                 CAST(sum(rc.cr) AS BIGINT) AS rcr_sum
           FROM rf JOIN rc USING (bucket) LEFT JOIN tc USING (bucket)
           GROUP BY rf.doc_id)
         SELECT d.doc_id, coalesce(per.n_feats, 0) AS n_feats,
-               coalesce(per.tct_sum, 0) AS tct_sum,
-               coalesce(per.rcr_sum, 0) AS rcr_sum
+               CAST(coalesce(per.tct_sum, 0) AS BIGINT) AS tct_sum,
+               CAST(coalesce(per.rcr_sum, 0) AS BIGINT) AS rcr_sum
         FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
     """
 

@@ -39,11 +39,13 @@ def with_host_slots(df: DataFrame, politeness: DataFrame | None,
     (virtual send slot = host_rank × delay_s).  ``politeness`` is the small
     (host, delay_s, ...) dimension — broadcast joined."""
     if politeness is not None:
-        # one dim row per host, MIN delay on conflict: a duplicate host
-        # row in the dim would fan every frontier row for that host into
-        # duplicate fetches (robots_gate_df guards its dim the same way)
+        # one dim row per host, MAX delay on conflict (the conservative
+        # choice: no host is fetched faster than any of its rows allows):
+        # a duplicate host row in the dim would fan every frontier row for
+        # that host into duplicate fetches (robots_gate_df guards its dim
+        # the same way)
         dim = politeness.groupBy(host_col).agg(
-            F.min("delay_s").alias("delay_s"))
+            F.max("delay_s").alias("delay_s"))
         df = df.join(F.broadcast(dim), host_col, "left")
         delay = F.coalesce(F.col("delay_s"), F.lit(default_delay))
     else:
@@ -372,11 +374,9 @@ def with_salted_host_slots(df: DataFrame, politeness: DataFrame | None,
     if not hot_hosts or salt_buckets <= 1:
         return with_host_slots(df, politeness, order_cols, host_col, default_delay)
     if politeness is not None:
-        # one dim row per host, MIN delay on conflict: a duplicate host
-        # row in the dim would fan every frontier row for that host into
-        # duplicate fetches (robots_gate_df guards its dim the same way)
+        # one dim row per host, MAX delay on conflict (see with_host_slots)
         dim = politeness.groupBy(host_col).agg(
-            F.min("delay_s").alias("delay_s"))
+            F.max("delay_s").alias("delay_s"))
         df = df.join(F.broadcast(dim), host_col, "left")
         delay = F.coalesce(F.col("delay_s"), F.lit(default_delay))
     else:

@@ -1,34 +1,48 @@
-"""The deep-crawl engine: traversal loops as DataFrame supersteps.
+"""The deep-crawl engine: one superstep loop, three pop policies.
 
-Each reference traversal loop (SURVEY §2.5) becomes a driver-side loop whose
-body is ONE declarative DataFrame DAG per superstep:
+Every reference traversal (SURVEY §2.5) runs through the same driver-side
+loop, as the reference strategies share deep_crawling/base_strategy.py.
+Each superstep is ONE declarative DataFrame DAG: pop → per-host budget
+split → mark seen → fetch → append results → backoff fold → link
+discovery → next frontier.  Strategies differ only in how a superstep
+pops rows off the frontier (``_PopPolicy``, chosen from
+``CrawlConfig.strategy``):
 
-  BFS  (bfs_strategy.py:141-187) — superstep = one level: mark-seen →
-       fetch → append results → link_discovery dataflow → next level.
-  BF   (bff_strategy.py:127-199) — superstep = one priority-queue pop of
-       ``batch_size`` (10 in parity mode, millions at scale): TakeOrdered
-       pop → anti-join visited → fetch → cumulative-capacity discovery →
-       push.
-  DFS  (dfs_strategy.py:15-62) — inherently sequential (one URL per pop);
-       implemented for parity completeness, not a scale target.
+  level (bfs, bfs_strategy.py:141-187) — every eligible row; a superstep
+        is one BFS level plus whatever politeness deferred into it.
+  heap  (best_first, bff_strategy.py:127-199) — the first ``batch_size``
+        rows in (score, depth, url, parent, push order), 10 in parity mode
+        and millions at scale; discovery pushes RAW hrefs (a faithful
+        reference quirk) under a page budget that counts successes as they
+        land.
+  stack (dfs_batched; dfs = the same pop with batch 1,
+        dfs_strategy.py:15-62) — the deepest ``batch_size`` stack entries;
+        children are pushed reversed, so the first-discovered pops next.
+
+Whether a crawl keeps fetching after ``max_pages`` is reached is a fixed
+property of each policy: the reference BFS and DFS loops have no budget
+check at pop and drain what they queued, best-first stops (bff :146-149)
+and so does dfs_batched.  Strict DFS therefore is NOT dfs_batched with
+batch 1 once the budget binds.
 
 Link discovery (bfs_strategy.py:68-139 / bff_strategy.py:76-125) is the
-same dataflow both ways:
+same dataflow for every policy:
 
-  explode links → canonicalize (Arrow UDF; BFS family only — best-first
-  operates on RAW hrefs, a faithful reference quirk) → validity + filter
-  chain (Catalyst conjunction on the raw href) → score (Catalyst) →
-  anti-join seen → per-parent capacity truncation (windows reproducing the
-  reference's conditional sort-then-truncate) → dense global sequence.
+  explode links → canonicalize (Arrow UDF; level and stack only) →
+  validity + filter chain (Catalyst conjunction on the absolute href) →
+  score (Catalyst) → anti-join seen → per-parent capacity truncation
+  (windows reproducing the reference's conditional sort-then-truncate) →
+  dense global sequence.
 
 Scale notes (the 100 TB design):
-  - every per-level global ordering uses ``with_global_seq`` (range
+  - every per-superstep global ordering uses ``with_global_seq`` (range
     partition + offset assign), never a single-partition window;
   - the seen table is append-only and anti-joined on the canonical URL
-    (hash-partitioned); a PartitionedBloom sidecar can prefilter the probe
-    side (operators/seen.py);
-  - the queue pop is ``orderBy(...).limit(B)`` = distributed TakeOrdered,
-    and queue subtraction is an anti-join on ``push_seq`` (multiset-exact);
+    (hash-partitioned); a Bloom or cuckoo sidecar (operators/seen.py)
+    lets definitely-new candidates skip that join;
+  - the heap and stack pops are ``orderBy(...).limit(B)`` = distributed
+    TakeOrdered, and queue subtraction is an anti-join on the unique queue
+    key (multiset-exact);
   - fetch joins are hash joins on the canonical fetch key; the pages/links
     tables would be Iceberg-bucketed by that key in production so the join
     co-locates without shuffle;
@@ -88,19 +102,20 @@ class CrawlConfig:
     include_external: bool = False
     filters: list[FilterSpec] = field(default_factory=list)
     scorer: ScorerSpec | None = None
-    batch_size: int = 10  # best-first pop size (bff_strategy.py:18)
+    batch_size: int = 10  # best-first / dfs_batched pop size (bff_strategy.py:18)
     check_robots_txt: bool = False  # async_configs.py:713 default False
     # D1: per-host per-superstep fetch cap (= floor(superstep_window/delay)
     # in production).  Overflow rows are DEFERRED to the next superstep —
     # the batch translation of RateLimiter's per-domain sleep
-    # (async_dispatcher.py:44-65).  BFS-family only; None disables.
+    # (async_dispatcher.py:44-65).  bfs and best_first only (the DFS
+    # strategies raise); None disables.
     politeness_budget: int | None = None
     # D2: 429/503 backoff loop (async_dispatcher.py:67-87).  When True the
     # engine folds per-host RateLimiter state after every superstep,
     # requeues rate-limited rows with attempt+1 at ready-superstep
     # now + ceil(host_delay / superstep_window_s), and stops retrying once
     # the host's fail streak passes max_retries (give-up) or the row has
-    # been attempted max_retries extra times.
+    # been attempted max_retries extra times.  bfs and best_first only.
     backoff: bool = False
     superstep_window_s: float = 10.0  # virtual wall-clock of one superstep
     max_retries: int = 3  # async_dispatcher.py:35
@@ -154,15 +169,43 @@ RESULT_COLS = [
     "score", "success", "status_code", "attempt", "image_id",
 ]
 
-# BFS frontier row: ``seq`` is the GLOBAL enqueue sequence (seeds first,
-# then discovery order), stable across budget deferral and retries — it is
-# also the emitted result ``seq``.  ``attempt`` counts backoff retries;
-# ``ready`` is the earliest superstep the row may fetch in.
+# Frontier row.  ``seq`` is the queue key, unique within the frontier and
+# stable across budget deferral and retries: the global enqueue sequence
+# for level (seeds first, then discovery order; also the emitted result
+# seq), the push sequence for heap, the stack position for stack.
+# ``attempt`` counts backoff retries; ``ready`` is the earliest superstep
+# the row may fetch in.
 FRONTIER_COLS = ["url", "parent", "depth", "seq", "score", "attempt", "ready"]
 FRONTIER_SCHEMA = (
     "url string, parent string, depth int, seq long, score double, "
     "attempt int, ready long"
 )
+
+
+@dataclass(frozen=True)
+class _PopPolicy:
+    """How a superstep takes rows off the frontier."""
+
+    order: tuple  # priority: pop, budget split, per-URL dedup, result seq
+    limit: int | None  # rows per pop; None = every eligible row (level)
+    drain: bool  # keeps fetching queued rows after max_pages is reached
+    raw_hrefs: bool = False  # pushes raw hrefs under a running page budget
+    lifo: bool = False  # pushes reversed; every row reports scorer(url)
+
+
+def _pop_policy(cfg: CrawlConfig) -> _PopPolicy:
+    s = cfg.strategy
+    if s == "bfs":
+        return _PopPolicy((F.col("depth"), F.col("seq")), None, drain=True)
+    if s == "best_first":
+        heap = (F.col("score"), F.col("depth"), F.col("url"),
+                F.col("parent").asc_nulls_first(), F.col("seq"))
+        return _PopPolicy(heap, cfg.batch_size, drain=False, raw_hrefs=True)
+    if s in ("dfs", "dfs_batched"):
+        return _PopPolicy((F.col("seq").desc(),),
+                          1 if s == "dfs" else cfg.batch_size,
+                          drain=s == "dfs", lifo=True)
+    raise ValueError(f"unknown strategy {s!r}")
 
 
 class CrawlEngine:
@@ -221,13 +264,10 @@ class CrawlEngine:
         )
         return [r["h"] for r in rows if r["h"]]
 
-    def _prepare(self, frontier: DataFrame, n_rows: int | None = None,
-                 hot_hosts: list[str] | None = None) -> DataFrame:
+    def _prepare(self, frontier: DataFrame, n_rows: int,
+                 hot_hosts: list[str]) -> DataFrame:
         """Canonical fetch key + host, partitioned for the fetch stage."""
-        f = frontier
-        if "attempt" not in f.columns:
-            f = f.withColumn("attempt", F.lit(0))
-        f = f.withColumn(
+        f = frontier.withColumn(
             "fetch_key", canonical_col(F.col("url"), F.col("url"))
         ).withColumn("host", F.lower(host_of(F.col("fetch_key"))))
         # Hash-partition on host, sized to the batch: (a) breaks the
@@ -237,14 +277,11 @@ class CrawlEngine:
         # (Window.partitionBy(host) reuses this exchange — no extra
         # shuffle); (c) hot hosts fan out over salted sub-keys so one
         # domain can never pin a whole task (D7).
-        if n_rows is not None:
-            if hot_hosts:
-                f = salt_hot_hosts(f, hot_hosts, self.cfg.salt_buckets,
-                                   url_col="url")
-                f = f.repartition(self._parts(n_rows), "host_part").drop("host_part")
-            else:
-                f = f.repartition(self._parts(n_rows), "host")
-        return f
+        if hot_hosts:
+            f = salt_hot_hosts(f, hot_hosts, self.cfg.salt_buckets,
+                               url_col="url")
+            return f.repartition(self._parts(n_rows), "host_part").drop("host_part")
+        return f.repartition(self._parts(n_rows), "host")
 
     def _fetch_prepared(self, f: DataFrame,
                         hot_hosts: list[str] | None = None) -> DataFrame:
@@ -284,9 +321,6 @@ class CrawlEngine:
             .otherwise(F.coalesce(F.col("page_status"), F.lit(0))),
         ).drop("page_success", "page_status")
 
-    def _fetch(self, frontier: DataFrame, n_rows: int | None = None) -> DataFrame:
-        return self._fetch_prepared(self._prepare(frontier, n_rows))
-
     def _mark_seen(self, seen: DataFrame, new_urls: DataFrame) -> DataFrame:
         """Append to the URL-seen table AND the Bloom sidecar — the sidecar
         must hold every seen URL before any discovery probe (no false
@@ -308,7 +342,8 @@ class CrawlEngine:
     def _retry_rows(self, fetched: DataFrame, domain_state: DataFrame,
                     superstep: int) -> DataFrame:
         """D2 requeue: rate-limited rows re-enter the frontier with
-        attempt+1, eligible after the host's folded backoff delay
+        attempt+1 and their queue key (a best-first retry re-pops in heap
+        order), eligible after the host's folded backoff delay
         (ceil(current_delay / superstep_window_s) supersteps); rows on
         gave-up hosts and rows out of attempts are final (reference error
         'Rate limit retry count exceeded', async_dispatcher.py:364-366).
@@ -317,28 +352,6 @@ class CrawlEngine:
         pandas); the join shuffles on host — AQE broadcast-converts it
         while the state is small, and at 10^8 hosts it stays a
         distributed hash join."""
-        j, ready = self._retry_base(fetched, domain_state, superstep)
-        return j.select(
-            "url", "parent", "depth", "seq", "score",
-            (F.col("attempt") + 1).alias("attempt"), ready,
-        )
-
-    def _retry_rows_bf(self, fetched: DataFrame, domain_state: DataFrame,
-                       superstep: int) -> DataFrame:
-        """D2 requeue for best-first: same rule as _retry_rows but the row
-        returns to the QUEUE with its original push_seq (it re-pops in heap
-        order once ready)."""
-        j, ready = self._retry_base(fetched, domain_state, superstep)
-        return j.select(
-            "score", "depth", "url", "parent", "push_seq",
-            (F.col("attempt") + 1).alias("attempt"), ready,
-        )
-
-    def _retry_base(self, fetched: DataFrame, domain_state: DataFrame,
-                    superstep: int):
-        """Shared D2 requeue core (rate-limit filter → state join →
-        give-up screen → backoff-steps arithmetic); one place so the
-        BFS and best-first rules can never silently diverge."""
         cfg = self.cfg
         failed = fetched.filter(
             F.col("status_code").isin(list(RATE_LIMIT_CODES))
@@ -354,7 +367,11 @@ class CrawlEngine:
                 / F.lit(float(cfg.superstep_window_s))
             ).cast("long"),
         )
-        return j, (F.lit(superstep) + steps).alias("ready")
+        return j.select(
+            "url", "parent", "depth", F.col("key").alias("seq"), "score",
+            (F.col("attempt") + 1).alias("attempt"),
+            (F.lit(superstep) + steps).alias("ready"),
+        )
 
     # -------------------------------------------------------- discovery
     def _discover(
@@ -362,26 +379,27 @@ class CrawlEngine:
         fetched: DataFrame,
         seen: DataFrame,
         remaining_expr,
-        next_depth_expr,
         canonicalize: bool,
         base_seq: int,
-        seq_col: str = "seq",
-        est_rows: int | None = None,
+        est_rows: int,
         pending: DataFrame | None = None,
+        reverse: bool = False,
     ) -> DataFrame:
         """link_discovery as a dataflow (bfs_strategy.py:68-139 with
-        canonicalize=True; bff_strategy.py:76-125 with canonicalize=False).
+        canonicalize=True; bff_strategy.py:76-125 with canonicalize=False)
+        → frontier rows keyed from ``base_seq`` in discovery order, or in
+        reverse discovery order for a stack (``reverse``).
 
         ``remaining_expr`` is the per-parent remaining-capacity column
-        (constant per level for BFS, cumulative within batch for BF).
-        ``next_depth_expr`` is parent depth + 1.
+        (constant per superstep for level and stack, cumulative within the
+        batch for heap).
         """
         cfg = self.cfg
         src = fetched.filter(F.col("success")).select(
-            F.col(seq_col).alias("parent_seq"),
+            F.col("seq").alias("parent_seq"),
             F.col("url").alias("parent_url"),
             F.col("fetch_key").alias("parent_key"),
-            next_depth_expr.alias("link_depth"),
+            (F.col("depth") + 1).alias("link_depth"),
             remaining_expr.alias("remaining"),
         )
         src = src.filter(F.col("link_depth") <= F.lit(cfg.max_depth))  # :88-90
@@ -446,12 +464,12 @@ class CrawlEngine:
         # slice (true dups + ~fp_rate) pays the exact left_anti — at 10^10
         # seen URLs that join's probe side shrinks to the dup fraction.
         seen_t = seen.select(F.col("url").alias("target"))
+        nparts = self._parts(est_rows)
         if self.bloom is not None:
             # lazy localCheckpoint: both union branches read the SAME
             # materialization of the cogroup probe (first job caches it;
             # blocks are GC-released with the plan) instead of running the
             # canonicalize→cogroup pipeline twice
-            nparts = self._parts(est_rows) if est_rows is not None else None
             flagged = self.bloom.prefilter(
                 cand, "target", num_partitions=nparts
             ).localCheckpoint(eager=False)
@@ -489,134 +507,113 @@ class CrawlEngine:
             F.col("parent_seq"),
             F.col("rn"),
         )
-        nparts = self._parts(est_rows) if est_rows is not None else None
+        # stack reversal (dfs_strategy.py:57-60, batched): children of the
+        # earliest-popped parent, first link first, get the HIGHEST keys
+        order = ([F.col("parent_seq").desc(), F.col("rn").desc()] if reverse
+                 else ["parent_seq", "rn"])
         return with_global_seq(
-            out, ["parent_seq", "rn"], out_col="seq", start=base_seq,
-            num_partitions=nparts,
-        ).drop("parent_seq", "rn")
+            out, order, out_col="seq", start=base_seq, num_partitions=nparts,
+        ).select(
+            "url", "parent", "depth", "seq", "score",
+            F.lit(0).alias("attempt"), F.lit(0).cast("long").alias("ready"),
+        )
 
-    # ----------------------------------------------------------- resume
-    def _restore(self):
-        """Load the last committed snapshot (north_rule checkpoint/resume):
-        manifest → superstep + counters; orphan dirs from a crashed
-        superstep are deleted; returns None when nothing was committed."""
-        if self.store is None:
-            return None
-        mf = self.store.last_commit()
-        if mf is None:
-            return None
-        s = mf["superstep"]
-        self.store.clean_orphans(s)
-        frontier = self.store.read_one(self.spark, "frontier", s)
-        seen = self.store.read_one(self.spark, "seen", s)
-        parts = []
-        start = 0
-        comp = self.store.read_compacted(self.spark, "results")
-        if comp is not None:
-            # compaction vacuumed the per-superstep delta dirs it merged;
-            # the compacted snapshot replaces parts 0..upto
-            cdf, upto = comp
-            parts.append(cdf)
-            start = upto + 1
-        for i in range(start, s + 1):
-            p = self.store.read_one(self.spark, "results", i)
-            parts.append(p)
-        parts = [
-            p.withColumn("attempt", F.lit(0))
-            if p is not None and "attempt" not in p.columns
-            # pre-D2 checkpoint: historical parts predate the attempt
-            # column; backfill so the RESULT_COLS union in _finish holds
-            else p
-            for p in parts
-        ]
-        dstate_df = self.store.read_one(self.spark, "domain_state", s)
-        return {
-            "superstep": s + 1,
-            "frontier": frontier,
-            "seen": seen,
-            "result_parts": [p for p in parts if p is not None],
-            "counters": mf["counters"],
-            "domain_state": dstate_df,  # DataFrame (never driver pandas)
-        }
+    # ------------------------------------------------------------ loop
+    def _pop(self, pol: _PopPolicy, frontier: DataFrame, eligible: DataFrame,
+             seen: DataFrame, superstep: int):
+        """Take this superstep's rows off the frontier → (batch, rest,
+        persisted pop to release at superstep end).
 
-    # ------------------------------------------------------------- BFS
-    def run_bfs(self, seeds: list[str], resume: bool = False) -> CrawlRun:
-        """BFS superstep loop with the full D1/D2/D7/T6 schedule wired in.
+        Level pops every eligible row.  Heap and stack pop the first
+        ``limit`` eligible rows in policy order; already-visited rows then
+        drop out but still consumed a slot (bff :153-160, dfs :35), and
+        retries are exempt (their URL was marked by the failed attempt).
+        A URL popped twice keeps its first row in policy order."""
+        if pol.limit is None:
+            waiting = (frontier.filter(F.col("ready") > F.lit(superstep))
+                       if self.cfg.backoff else None)
+            return eligible, waiting, None
+        popped = eligible.orderBy(*pol.order).limit(pol.limit).persist(
+            StorageLevel.MEMORY_AND_DISK)
+        rest = frontier.join(popped.select("seq"), "seq", "left_anti")
+        fresh = popped.filter(F.col("attempt") == 0).join(seen, "url", "left_anti")
+        batch = fresh.unionByName(popped.filter(F.col("attempt") > 0))
+        first = Window.partitionBy("url").orderBy(*pol.order)
+        batch = batch.withColumn("__r", F.row_number().over(first)).filter(
+            F.col("__r") == 1).drop("__r")
+        return batch, rest, popped
 
-        Scheduled semantics (oracle twin: oracle/crawler.py
-        crawl_bfs_scheduled; plain BFS with budget/backoff off is exactly
-        bfs_strategy.py:141-187):
+    def run(self, seeds: list[str], resume: bool = False) -> CrawlRun:
+        """The superstep loop every strategy shares (oracle twins:
+        crawl_bfs_scheduled, crawl_best_first_scheduled, crawl_dfs,
+        crawl_dfs_batched in oracle/crawler.py).  One superstep:
 
-          - frontier rows carry a global enqueue seq; fetch order within a
-            superstep is (depth asc, seq asc) — strict BFS priority;
-          - D1 budget: each host fetches its first `budget` rows per
-            superstep (ranked pre-robots); the rest defer intact;
-          - D2 backoff: rate-limited rows requeue with attempt+1 at
-            ready = superstep + ceil(host_delay / window); gave-up hosts
-            stop retrying; empty-eligible supersteps fast-forward;
+          - pop: the policy takes rows off the frontier (``_pop``).  Rows
+            waiting on backoff (ready > superstep) are not eligible; a
+            superstep with nothing eligible fast-forwards to the earliest
+            ready one;
+          - D1 budget: each host fetches its first `budget` popped rows in
+            policy order (ranked pre-robots); the rest return to the
+            frontier intact and unmarked;
           - visited marks at fetch time (failures included,
-            bfs_strategy.py:161); deferred/waiting rows are excluded from
-            discovery via the pending anti-join instead;
-          - results = (superstep, seq) with seq the enqueue id; ordering
-            (superstep, depth, seq).
+            bfs_strategy.py:161);
+          - D2 backoff: rate-limited rows requeue with attempt+1 at
+            ready = superstep + ceil(host_delay / window) under their own
+            queue key; gave-up hosts stop retrying;
+          - next frontier = unpopped + deferred + retried + discovered rows.
+            Level discovery also excludes the URLs of the first three
+            (they are queued but not yet seen); heap and stack queues hold
+            duplicate URLs and drop them at pop, as the reference does.
         """
         cfg = self.cfg
         spark = self.spark
+        pol = _pop_policy(cfg)
+        budget = cfg.politeness_budget
+        if budget is not None and budget < 1:
+            raise ValueError("politeness_budget must be >= 1")
+        if pol.lifo and (budget is not None or cfg.backoff):
+            # no oracle twin defines a DFS schedule under deferral or
+            # retries; fetching unthrottled would silently break the promise
+            raise ValueError(
+                f"strategy {cfg.strategy!r} supports neither politeness_budget "
+                "nor backoff")
+        self.bloom = self._sidecar()
         state = self._restore() if resume else None
-        if state is not None:
-            frontier = state["frontier"]
-            if "attempt" not in frontier.columns:  # pre-D2 checkpoint
-                frontier = frontier.withColumn("attempt", F.lit(0)).withColumn(
-                    "ready", F.lit(0).cast("long")
-                )
-            seen = state["seen"]
-            pages_crawled = state["counters"]["pages_crawled"]
-            enq_base = state["counters"].get("enq_base")
-            superstep = state["superstep"]
-            result_parts = state["result_parts"]
-            if enq_base is None:
-                # pre-enq_base checkpoint: seed from max(seq) over the
-                # restored frontier + results so the first post-resume
-                # discovery can't mint seqs colliding with historical ones
-                seqs = frontier.select("seq")
-                for p in result_parts:
-                    seqs = seqs.unionByName(p.select("seq"))
-                mx = seqs.agg(F.max("seq")).collect()[0][0]
-                enq_base = int(mx) + 1 if mx is not None else 0
-            domain_state = state.get("domain_state")
+        if state is None:
+            n = len(seeds)
+            # seeds pop in list order under every policy
+            frontier = spark.createDataFrame(
+                [(u, None, 0, n - 1 - i if pol.lifo else i, 0.0, 0, 0)
+                 for i, u in enumerate(seeds)],
+                FRONTIER_SCHEMA,
+            )
+            if pol.lifo and cfg.scorer is not None:
+                # DFS results carry scorer(url) (dfs_strategy.py); pushed
+                # rows already hold it from discovery, seeds get it here
+                frontier = frontier.withColumn(
+                    "score", cfg.scorer.column(F.col("url")).cast("double"))
+            seen = spark.createDataFrame([], "url string")
+            superstep, result_parts, n_frontier = 0, [], n
+            pages_crawled, enq_base, n_results = 0, n, 0
+            domain_state = empty_domain_state_df(spark)
+            hint: dict | None = None
+        else:
+            frontier, seen = state["frontier"], state["seen"]
+            superstep, result_parts = state["superstep"], state["result_parts"]
+            c = state["counters"]
+            # the committed hint describes the committed frontier: a resumed
+            # run needs no count job and plans like an uninterrupted one
+            pages_crawled, enq_base, n_results, hint = (
+                c["pages_crawled"], c["enq_base"], c["n_results"], c["hint"])
+            n_frontier = hint["n"]
+            domain_state = state["domain_state"]
             if domain_state is None:
                 domain_state = empty_domain_state_df(spark)
             if self.bloom is not None:
                 self.bloom.add(seen.select("url"))
-        else:
-            frontier = spark.createDataFrame(
-                [(u, None, 0, i, 0.0, 0, 0) for i, u in enumerate(seeds)],
-                FRONTIER_SCHEMA,
-            )
-            seen = spark.createDataFrame([], "url string")
-            pages_crawled = 0
-            enq_base = len(seeds)
-            superstep = 0
-            result_parts = []
-            domain_state = empty_domain_state_df(spark)
-        budget = cfg.politeness_budget
-        if budget is not None and budget < 1:
-            raise ValueError("politeness_budget must be >= 1")
-        # frontier size carried across supersteps (the end-of-superstep agg
-        # already counts the next frontier — no extra count job per loop)
-        n_frontier = len(seeds) if state is None else frontier.count()
-        # end-of-superstep hint (from the fused frontier agg): eligible
-        # count at superstep+1, earliest ready, per-raw-host max and
-        # empty-host count.  Kills the per-loop eligible-count job and the
-        # budget checkpoint+split when no host can exceed the budget.  The
-        # raw-host grouping is exact for the skip decision: for any
-        # absolute URL the lowered host equals the canonical host (C2 only
-        # lowercases the netloc), and rows without a netloc force the
-        # exact path via the empty-host guard.
-        hint: dict | None = None
-        while superstep < cfg.max_supersteps:
-            if n_frontier == 0:
-                break
+        while superstep < cfg.max_supersteps and n_frontier:
+            if not pol.drain and pages_crawled >= cfg.page_budget:
+                break  # bff :146-149
             hint_ok = hint is not None and hint["for"] == superstep
             if cfg.backoff:
                 n_elig = (
@@ -632,14 +629,14 @@ class CrawlEngine:
                     hint = None
                     continue
                 eligible = frontier.filter(F.col("ready") <= F.lit(superstep))
-                waiting = frontier.filter(F.col("ready") > F.lit(superstep))
-                n_wait = n_frontier - n_elig
             else:
-                eligible, waiting = frontier, None
-                n_elig, n_wait = n_frontier, 0
+                eligible, n_elig = frontier, n_frontier
             t0 = time.time()
-            hot = self._hot_hosts(eligible, n_elig)
-            prep = self._prepare(eligible, n_rows=n_elig, hot_hosts=hot)
+            batch, rest, popped = self._pop(pol, frontier, eligible, seen, superstep)
+            held = [popped]
+            n_pop = n_elig if pol.limit is None else min(n_elig, pol.limit)
+            hot = self._hot_hosts(batch, n_pop)
+            prep = self._prepare(batch, n_rows=n_pop, hot_hosts=hot)
             # skip the checkpoint + window split when the hint proves no
             # host holds more than `budget` frontier rows (the split would
             # defer nothing) — the common steady-state for wide crawls
@@ -647,29 +644,42 @@ class CrawlEngine:
                 budget is not None and hint_ok
                 and hint["empty"] == 0 and hint["maxhost"] <= budget
             )
+            # without a split, mark from the unprepared rows: the seen
+            # union then never runs the canonicalize pass
+            within, deferred, marked = prep, None, batch
             if budget is not None and not skip_split:
-                prep = prep.localCheckpoint(eager=True)
                 within, deferred = split_host_budget(
-                    prep, budget, ["depth", "seq"], hot_hosts=hot,
-                    salt_buckets=cfg.salt_buckets, url_col="url",
+                    prep.localCheckpoint(eager=True), budget, list(pol.order),
+                    hot_hosts=hot, salt_buckets=cfg.salt_buckets, url_col="url",
                 )
-                deferred = deferred.select(*FRONTIER_COLS)
-                marked = within.select("url")
+                marked = within
+            if pol.limit is None:
+                within = within.withColumn("key", F.col("seq"))
             else:
-                within, deferred = prep, None
-                marked = eligible.select("url")
+                # result seq = position in policy order over the rows that
+                # fetch (after the split); the queue key moves to `key`
+                within = marked = with_global_seq(
+                    within, list(pol.order), out_col="rseq", start=n_results,
+                    num_partitions=self._parts(n_pop),
+                ).withColumnRenamed("seq", "key").withColumnRenamed(
+                    "rseq", "seq").persist(StorageLevel.MEMORY_AND_DISK)
+                held.append(within)
             # T6: mark visited BEFORE fetch (bfs_strategy.py:161) — the
             # URL-seen set includes failed fetches; budget-deferred rows
-            # are not seen until actually fetched.
-            seen = self._mark_seen(seen, marked)
+            # are not seen until actually fetched, and a retry's URL was
+            # marked by its first attempt
+            seen = self._mark_seen(
+                seen, marked.filter(F.col("attempt") == 0).select("url"))
             t_split = time.time()
             fetched = self._fetch_prepared(within, hot_hosts=hot)
-            # duplicate-URL quirk (bfs_strategy.py:174): every result of a
-            # URL that appears twice in a superstep reports the parent of
-            # the FIRST (lowest enqueue seq) entry for that URL.
-            wfirst = Window.partitionBy("url").orderBy("seq")
-            fetched = fetched.withColumn("parent", F.first("parent").over(wfirst))
+            if pol.limit is None:
+                # duplicate-URL quirk (bfs_strategy.py:174): every result
+                # of a URL that appears twice in a superstep reports the
+                # parent of the FIRST (lowest enqueue seq) entry for it
+                wfirst = Window.partitionBy("url").orderBy("seq")
+                fetched = fetched.withColumn("parent", F.first("parent").over(wfirst))
             fetched = fetched.persist(StorageLevel.MEMORY_AND_DISK)
+            held.append(fetched)
             stat = fetched.agg(
                 F.count("*").alias("n"),
                 F.sum(F.col("success").cast("long")).alias("ok"),
@@ -678,15 +688,17 @@ class CrawlEngine:
             t_fetch = time.time()
             n_within = int(stat["n"])
             n_success = int(stat["ok"] or 0)
-            min_succ_depth = stat["dmin"]
+            pages_before = pages_crawled
             pages_crawled += n_success
-            results_s = fetched.withColumn("superstep", F.lit(superstep)).select(RESULT_COLS)
             # non-blocking: the results write (a job over the persisted
             # fetch) overlaps the discovery/frontier work below; joined
-            # before fetched.unpersist()
+            # before the fetch unpersists.  A heap/stack pop of only
+            # visited rows fetched nothing and writes no part.
             res_future = self._io_pool.submit(
-                self._persist_results, results_s, superstep
-            )
+                self._persist_results,
+                fetched.withColumn("superstep", F.lit(superstep)).select(RESULT_COLS),
+                superstep,
+            ) if n_within else None
             retries = None
             if cfg.backoff:
                 # lazy checkpoint: materialized by this superstep's retry
@@ -698,70 +710,53 @@ class CrawlEngine:
                 ).localCheckpoint(eager=False)
                 retries = self._retry_rows(fetched, domain_state, superstep)
             pending = None
-            for part in (deferred, waiting, retries):
+            for part in (rest, deferred, retries):
                 if part is not None:
                     part = part.select(*FRONTIER_COLS)
                     pending = part if pending is None else pending.unionByName(part)
-            remaining = cfg.page_budget - pages_crawled
-            if (
-                n_success > 0 and remaining > 0 and min_succ_depth is not None
-                and int(min_succ_depth) + 1 <= cfg.max_depth
-            ):
+            # page budget left for discovery: heap counts successes as they
+            # land (bff :146-149), so its best row is the first success
+            left = cfg.page_budget - (pages_before + 1 if pol.raw_hrefs
+                                      else pages_crawled)
+            if (n_success > 0 and left > 0
+                    and int(stat["dmin"]) + 1 <= cfg.max_depth):
+                src, remaining = fetched, F.lit(left)
+                if pol.raw_hrefs:
+                    # per-parent remaining from cumulative successes in
+                    # result order: a two-pass distributed cumsum, NOT
+                    # Window.orderBy("seq") (one task for the whole batch)
+                    src = with_global_cumsum(
+                        fetched, ["seq"], "success", out_col="cum_succ",
+                        num_partitions=self._parts(n_pop),
+                    )
+                    remaining = (F.lit(cfg.page_budget - pages_before)
+                                 - F.col("cum_succ"))
                 nxt = self._discover(
-                    fetched,
-                    seen,
-                    remaining_expr=F.lit(remaining),
-                    next_depth_expr=F.col("depth") + 1,
-                    canonicalize=True,
-                    base_seq=enq_base,
-                    est_rows=n_elig * 8,
-                    pending=pending,
-                ).withColumn("attempt", F.lit(0)).withColumn(
-                    "ready", F.lit(0).cast("long")
-                ).select(*FRONTIER_COLS)
+                    src, seen, remaining, canonicalize=not pol.raw_hrefs,
+                    base_seq=enq_base, est_rows=n_pop * 8,
+                    pending=pending if pol.limit is None else None,
+                    reverse=pol.lifo,
+                )
             else:
-                nxt = frontier.limit(0).select(*FRONTIER_COLS)
+                nxt = frontier.limit(0)
             if pending is not None:
                 nxt = pending.unionByName(nxt)
             # lazy checkpoint: the fused agg below is the materializing job
-            # (the old eager checkpoint + separate count was two jobs)
+            # (an eager checkpoint + separate count would be two jobs)
             nxt = nxt.localCheckpoint(eager=False)
-            # anchored host extract for the skip-split guard: host_of's
-            # bare '://([^/]+)' would pull a "host" out of a query string
-            # ('http//typo?u=https://real.com/x'), hiding a row the
-            # canonical parser maps to host '' — such rows must land in
-            # the `empty` count so the guard forces the exact split path
-            hint_host = F.lower(F.regexp_extract(
-                F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]+)", 1))
-            g = nxt.groupBy(hint_host.alias("__h")).agg(
-                F.count("*").alias("c"),
-                F.max("seq").alias("mx"),
-                F.min("ready").alias("mr"),
-                F.sum((F.col("ready") <= F.lit(superstep + 1)).cast("long")).alias("rdy"),
-            )
-            nstat = g.agg(
-                F.sum("c").alias("n"),
-                F.max("mx").alias("mx"),
-                F.max("c").alias("maxhost"),
-                F.sum(F.when(F.col("__h") == "", F.col("c")).otherwise(F.lit(0))).alias("empty"),
-                F.min("mr").alias("minready"),
-                F.sum("rdy").alias("nready"),
-            ).collect()[0]
-            n_next = int(nstat["n"] or 0)
-            enq_base = max(enq_base, int(nstat["mx"] if nstat["mx"] is not None else -1) + 1)
-            hint = {
-                "for": superstep + 1,
-                "nready": int(nstat["nready"] or 0),
-                "minready": None if nstat["minready"] is None else int(nstat["minready"]),
-                "maxhost": int(nstat["maxhost"] or 0),
-                "empty": int(nstat["empty"] or 0),
-            }
+            hint = self._frontier_hint(nxt, superstep + 1)
+            n_next = hint["n"]
+            enq_base = max(enq_base, hint["mx"] + 1)
             t_disc = time.time()
-            result_parts.append(res_future.result())
+            if res_future is not None:
+                result_parts.append(res_future.result())
             t_results = time.time()
+            n_results += n_within
             self._log(
                 superstep=superstep, popped=n_within, eligible=n_elig,
-                deferred=n_elig - n_within, waiting=n_wait,
+                # popped off the frontier but not fetched: budget-deferred
+                # rows, plus visited rows a heap/stack pop discarded
+                deferred=n_pop - n_within, waiting=n_frontier - n_elig,
                 successes=n_success, pages_crawled=pages_crawled,
                 frontier_out=n_next, hot_hosts=len(hot),
                 budget_split_skipped=bool(skip_split),
@@ -775,423 +770,106 @@ class CrawlEngine:
             )
             self._commit(superstep, frontier=nxt, seen=seen,
                          counters={"pages_crawled": pages_crawled,
-                                   "enq_base": enq_base},
+                                   "enq_base": enq_base,
+                                   "n_results": n_results, "hint": hint},
                          domain_state=domain_state if cfg.backoff else None)
-            fetched.unpersist()
+            for df in held:
+                if df is not None:
+                    df.unpersist()
             frontier = nxt
             n_frontier = n_next
             superstep += 1
-        return self._finish(result_parts, seen, pages_crawled,
-                            order=["superstep", "depth", "seq"])
+        order = ["superstep", "depth", "seq"] if pol.limit is None else ["seq"]
+        return self._finish(result_parts, seen, pages_crawled, order=order)
 
-    # ------------------------------------------------------------- BF
-    def run_best_first(self, seeds: list[str], resume: bool = False) -> CrawlRun:
-        """Best-first superstep loop with the same D1/D2 schedule as
-        run_bfs (oracle twin: crawl_best_first_scheduled):
+    @staticmethod
+    def _frontier_hint(nxt: DataFrame, for_superstep: int) -> dict:
+        """One fused aggregate over the next frontier: its size and max
+        key, plus the hint for ``for_superstep`` — eligible count, earliest
+        ready, per-raw-host max and empty-host count.  The hint kills the
+        per-loop eligible-count job and the budget checkpoint+split when
+        no host can exceed the budget.  The raw-host grouping is exact for
+        the skip decision: for any absolute URL the lowered host equals the
+        canonical host (C2 only lowercases the netloc), and rows without a
+        netloc force the exact path via the empty-host guard."""
+        # anchored host extract for the skip-split guard: host_of's
+        # bare '://([^/]+)' would pull a "host" out of a query string
+        # ('http//typo?u=https://real.com/x'), hiding a row the
+        # canonical parser maps to host '' — such rows must land in
+        # the `empty` count so the guard forces the exact split path
+        hint_host = F.lower(F.regexp_extract(
+            F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]+)", 1))
+        g = nxt.groupBy(hint_host.alias("__h")).agg(
+            F.count("*").alias("c"),
+            F.max("seq").alias("mx"),
+            F.min("ready").alias("mr"),
+            F.sum((F.col("ready") <= F.lit(for_superstep)).cast("long")).alias("rdy"),
+        )
+        st = g.agg(
+            F.sum("c").alias("n"),
+            F.max("mx").alias("mx"),
+            F.max("c").alias("maxhost"),
+            F.sum(F.when(F.col("__h") == "", F.col("c")).otherwise(F.lit(0))).alias("empty"),
+            F.min("mr").alias("minready"),
+            F.sum("rdy").alias("nready"),
+        ).collect()[0]
+        return {
+            "for": for_superstep,
+            "n": int(st["n"] or 0),
+            "mx": -1 if st["mx"] is None else int(st["mx"]),
+            "nready": int(st["nready"] or 0),
+            "minready": None if st["minready"] is None else int(st["minready"]),
+            "maxhost": int(st["maxhost"] or 0),
+            "empty": int(st["empty"] or 0),
+        }
 
-          - D1 budget: the post-dedup popped batch splits per host (first
-            `budget` in heap order); deferred rows return to the queue
-            UNMARKED with their push_seq, so they re-pop in heap order;
-          - D2 backoff: rate-limited rows re-push with attempt+1 at their
-            host's ready superstep; retries bypass the visited check at
-            pop (their url is already seen from the failed attempt);
-          - re-discovered URLs of deferred queue rows are NOT excluded —
-            queue multisets with duplicate URLs are reference BF behavior
-            (visited check at pop consumes the dup, bff :153-160)."""
-        cfg = self.cfg
-        spark = self.spark
-        state = self._restore() if resume else None
-        if state is not None:
-            queue = state["frontier"]
-            if "attempt" not in queue.columns:  # pre-D2 checkpoint
-                queue = queue.withColumn("attempt", F.lit(0)).withColumn(
-                    "ready", F.lit(0).cast("long")
-                )
-            queue = queue.localCheckpoint(eager=True)
-            seen = state["seen"]
-            pages_crawled = state["counters"]["pages_crawled"]
-            push_seq_base = state["counters"]["push_seq_base"]
-            result_seq_base = state["counters"]["result_seq_base"]
-            superstep = state["superstep"]
-            result_parts = state["result_parts"]
-            domain_state = state.get("domain_state")
-            if domain_state is None:
-                domain_state = empty_domain_state_df(spark)
-            if self.bloom is not None:
-                self.bloom.add(seen.select("url"))
-        else:
-            queue = spark.createDataFrame(
-                [(0.0, 0, u, None, i, 0, 0) for i, u in enumerate(seeds)],
-                "score double, depth int, url string, parent string, "
-                "push_seq long, attempt int, ready long",
-            ).localCheckpoint(eager=True)
-            seen = spark.createDataFrame([], "url string")
-            pages_crawled = 0
-            push_seq_base = len(seeds)
-            result_seq_base = 0
-            superstep = 0
-            result_parts = []
-            domain_state = empty_domain_state_df(spark)
-        QUEUE_COLS = ["score", "depth", "url", "parent", "push_seq",
-                      "attempt", "ready"]
-        budget = cfg.politeness_budget
-        if budget is not None and budget < 1:
-            raise ValueError("politeness_budget must be >= 1")
-        heap_order = [
-            F.col("score").asc(), F.col("depth").asc(), F.col("url").asc(),
-            F.col("parent").asc_nulls_first(), F.col("push_seq").asc(),
-        ]
-        while superstep < cfg.max_supersteps:
-            if pages_crawled >= cfg.page_budget:  # bff :146-149
-                break
-            if not queue.take(1):
-                break
-            if cfg.backoff:
-                eligible = queue.filter(F.col("ready") <= F.lit(superstep))
-                if not eligible.take(1):
-                    superstep = int(queue.agg(F.min("ready")).collect()[0][0])
-                    continue
-            else:
-                eligible = queue
-            t0 = time.time()
-            popped = eligible.orderBy(*heap_order).limit(cfg.batch_size).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            rest = queue.join(popped.select("push_seq"), "push_seq", "left_anti")
-            # visited check at pop consumes batch slots (bff :153-160):
-            # drop already-visited (retries exempt), then first-in-heap-order
-            # per duplicate URL
-            fresh0 = popped.filter(F.col("attempt") == 0).join(seen, "url", "left_anti")
-            batch = fresh0.unionByName(popped.filter(F.col("attempt") > 0))
-            wdup = Window.partitionBy("url").orderBy(
-                F.col("score"), F.col("depth"), F.col("parent").asc_nulls_first(),
-                F.col("push_seq"),
-            )
-            batch = batch.withColumn("__r", F.row_number().over(wdup)).filter(
-                F.col("__r") == 1
-            ).drop("__r")
-            deferred = None
-            if budget is not None:
-                prep = self._prepare(batch, n_rows=cfg.batch_size).localCheckpoint(
-                    eager=True
-                )
-                batch, deferred = split_host_budget(
-                    prep, budget, heap_order, url_col="url",
-                )
-                deferred = deferred.select(*QUEUE_COLS)
-            batch = with_global_seq(
-                batch,
-                ["score", "depth", "url", F.col("parent").asc_nulls_first(), "push_seq"],
-                out_col="seq",
-                start=result_seq_base,
-                num_partitions=self._parts(cfg.batch_size),
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            if not batch.take(1):
-                queue = rest if deferred is None else rest.unionByName(deferred)
-                queue = queue.localCheckpoint(eager=True)
-                popped.unpersist()
-                batch.unpersist()  # all-duplicate superstep: release too
-                superstep += 1
-                continue
-            # attempt>0 rows are retries whose url was marked seen at
-            # their first pop — re-marking would re-add them to the
-            # sidecar once per retry
-            seen = self._mark_seen(
-                seen, batch.filter(F.col("attempt") == 0).select("url"))
-            if budget is not None:
-                fetched = self._fetch_prepared(batch)
-            else:
-                fetched = self._fetch(batch, n_rows=cfg.batch_size)
-            fetched = fetched.persist(StorageLevel.MEMORY_AND_DISK)
-            bstat = fetched.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("success").cast("long")).alias("ok"),
-            ).collect()[0]
-            n_batch = int(bstat["n"])
-            n_success = int(bstat["ok"] or 0)
-            # non-blocking: the results write (a job over the persisted
-            # fetch) overlaps the discovery/queue work below; joined
-            # before fetched.unpersist()
-            results_s = fetched.withColumn(
-                "superstep", F.lit(superstep)
-            ).select(RESULT_COLS)
-            res_future = self._io_pool.submit(
-                self._persist_results, results_s, superstep
-            )
-            retries = None
-            if cfg.backoff:
-                domain_state = fold_domain_state_df(
-                    domain_state, fetched, seed=cfg.seed, superstep=superstep,
-                    max_retries=cfg.max_retries,
-                    num_partitions=self._parts(n_batch),
-                ).localCheckpoint(eager=False)
-                retries = self._retry_rows_bf(fetched, domain_state, superstep)
-            # cumulative successes in batch order → per-result remaining.
-            # Two-pass distributed cumsum (per-partition sums + broadcast
-            # prefix offsets), NOT Window.orderBy("seq") — the unpartitioned
-            # window funnels the whole popped batch through one task, fine
-            # at parity batch_size=10 but a straggler at the
-            # millions-at-scale batch this module promises.
-            fetched_c = with_global_cumsum(
-                fetched, ["seq"], "success", out_col="cum_succ",
-                num_partitions=self._parts(cfg.batch_size),
-            )
-            remaining = (
-                F.lit(cfg.page_budget) - (F.lit(pages_crawled) + F.col("cum_succ"))
-            )
-            pushes = self._discover(
-                fetched_c,
-                seen,
-                remaining_expr=remaining,
-                next_depth_expr=F.col("depth") + 1,
-                canonicalize=False,
-                base_seq=push_seq_base,
-                est_rows=cfg.batch_size * 8,
-            ).withColumnRenamed("seq", "push_seq").select(
-                "score", "depth", "url", "parent", "push_seq"
-            ).withColumn("attempt", F.lit(0)).withColumn(
-                "ready", F.lit(0).cast("long")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            n_pushed = pushes.count()
-            queue = rest.unionByName(pushes)
-            for part in (deferred, retries):
-                if part is not None:
-                    queue = queue.unionByName(part.select(*QUEUE_COLS))
-            queue = queue.localCheckpoint(eager=True)
-            pushes.unpersist()
-            result_parts.append(res_future.result())
-            pages_crawled += n_success
-            push_seq_base += n_pushed
-            result_seq_base += n_batch
-            self._log(
-                superstep=superstep, popped=n_batch, successes=n_success,
-                pages_crawled=pages_crawled, pushed=n_pushed,
-                wall_ms=int((time.time() - t0) * 1000),
-            )
-            self._commit(superstep, frontier=queue, seen=seen,
-                         counters={"pages_crawled": pages_crawled,
-                                   "push_seq_base": push_seq_base,
-                                   "result_seq_base": result_seq_base},
-                         domain_state=domain_state if cfg.backoff else None)
-            popped.unpersist()
-            fetched.unpersist()
-            batch.unpersist()
-            superstep += 1
-        return self._finish(result_parts, seen, pages_crawled, order=["seq"])
-
-    # ------------------------------------------------------------- DFS
-    def run_dfs(self, seeds: list[str]) -> CrawlRun:
-        """Sequential by nature (SURVEY §2.5 T2) — parity mode only."""
-        cfg = self.cfg
-        spark = self.spark
-        stack = spark.createDataFrame(
-            [(u, None, 0, i) for i, u in enumerate(seeds)],
-            "url string, parent string, depth int, stack_seq long",
-        ).localCheckpoint(eager=True)
-        seen = spark.createDataFrame([], "url string")
-        visited_driver: set[str] = set()
-        pages_crawled = 0
-        stack_seq_base = len(seeds)
-        seq = 0
-        superstep = 0
-        result_parts: list[DataFrame] = []
-        while superstep < cfg.max_supersteps:
-            top_rows = stack.orderBy(F.col("stack_seq").desc()).limit(1).collect()
-            if not top_rows:
-                break
-            top = top_rows[0]
-            stack = stack.filter(F.col("stack_seq") != top["stack_seq"])
-            if top["url"] in visited_driver or top["depth"] > cfg.max_depth:
-                # cut lineage on the skip path too: thousands of
-                # consecutive duplicate pops would otherwise chain
-                # un-checkpointed filters into a quadratic driver plan
-                stack = stack.localCheckpoint(eager=True)
-                continue
-            visited_driver.add(top["url"])
-            seen = self._mark_seen(
-                seen, spark.createDataFrame([(top["url"],)], "url string")
-            )
-            one = spark.createDataFrame(
-                [(top["url"], top["parent"], top["depth"], seq, 0.0)],
-                "url string, parent string, depth int, seq long, score double",
-            )
-            fetched = self._fetch(one, n_rows=1)
-            if cfg.scorer is not None:
-                fetched = fetched.withColumn(
-                    "score", cfg.scorer.column(F.col("url")).cast("double")
-                )
-            fetched = fetched.persist(StorageLevel.MEMORY_AND_DISK)
-            is_success = fetched.filter(F.col("success")).count() > 0
-            results_s = fetched.withColumn("superstep", F.lit(superstep)).select(RESULT_COLS)
-            result_parts.append(self._persist_results(results_s, superstep))
-            seq += 1
-            if is_success:
-                pages_crawled += 1
-                remaining = cfg.page_budget - pages_crawled
-                if top["depth"] + 1 <= cfg.max_depth and remaining > 0:
-                    links = self._discover(
-                        fetched, seen,
-                        remaining_expr=F.lit(remaining),
-                        next_depth_expr=F.lit(top["depth"] + 1),
-                        canonicalize=True,
-                        base_seq=0,
-                        est_rows=16,
-                    )
-                    # push reversed (dfs_strategy.py:57-60): first-discovered
-                    # gets the HIGHEST stack_seq so it pops next.
-                    n_links = links.count()
-                    if n_links:
-                        pushes = links.select(
-                            "url", "parent", "depth",
-                            (F.lit(stack_seq_base + n_links - 1) - F.col("seq")).alias("stack_seq"),
-                        )
-                        stack = stack.unionByName(pushes)
-                        stack_seq_base += n_links
-            stack = stack.localCheckpoint(eager=True)
-            fetched.unpersist()
-            superstep += 1
-        return self._finish(result_parts, seen, pages_crawled, order=["seq"])
-
-    def run_dfs_batched(self, seeds: list[str]) -> CrawlRun:
-        """Batched "DFS-ish" loop (oracle twin: crawl_dfs_batched): pop
-        the DEEPEST ``batch_size`` stack entries per superstep
-        (``ORDER BY stack_seq DESC LIMIT k``), fetch them as one parallel
-        stage, push discovered links reversed per parent in pop order —
-        children of the earliest-popped parent receive the highest new
-        stack seqs, so the crawl keeps diving where run_dfs would, at
-        batch_size-way parallelism.
-
-        Strict DFS ordering (child before next sibling) inherently
-        serializes fetches, which is why run_dfs is parity-only; this is
-        the usable-at-scale DFS.  Page counting and capacity are
-        level-style (remaining computed once per superstep from the
-        batch's successes).  Already-seen stack entries DO consume batch
-        slots: the pop takes the top ``batch_size`` entries first and the
-        visited anti-join then discards the stale ones (matching the
-        oracle twin) — a stack top dense with duplicates temporarily
-        lowers the effective fetch parallelism of a superstep."""
-        cfg = self.cfg
-        spark = self.spark
-        stack = spark.createDataFrame(
-            [(u, None, 0, len(seeds) - 1 - i) for i, u in enumerate(seeds)],
-            "url string, parent string, depth int, stack_seq long",
-        ).localCheckpoint(eager=True)
-        seen = spark.createDataFrame([], "url string")
-        pages_crawled = 0
-        stack_seq_base = len(seeds)
-        result_seq_base = 0
-        superstep = 0
-        result_parts: list[DataFrame] = []
-        while superstep < cfg.max_supersteps:
-            if pages_crawled >= cfg.page_budget:
-                break
-            if not stack.take(1):
-                break
-            popped = stack.orderBy(F.col("stack_seq").desc()).limit(
-                cfg.batch_size).persist(StorageLevel.MEMORY_AND_DISK)
-            rest = stack.join(
-                popped.select("stack_seq"), "stack_seq", "left_anti")
-            # discard already-seen entries without consuming batch slots;
-            # within-batch duplicate URLs collapse to the first pop
-            batch = popped.join(seen, "url", "left_anti")
-            wdup = Window.partitionBy("url").orderBy(F.col("stack_seq").desc())
-            batch = batch.withColumn(
-                "__r", F.row_number().over(wdup)
-            ).filter(F.col("__r") == 1).drop("__r")
-            batch = with_global_seq(
-                batch, [F.col("stack_seq").desc()], out_col="seq",
-                start=result_seq_base,
-                num_partitions=self._parts(cfg.batch_size),
-            ).withColumn("score", F.lit(0.0)).persist(
-                StorageLevel.MEMORY_AND_DISK)
-            if not batch.take(1):
-                stack = rest.localCheckpoint(eager=True)
-                popped.unpersist()
-                batch.unpersist()  # all-duplicate superstep: release too
-                superstep += 1
-                continue
-            seen = self._mark_seen(seen, batch.select("url"))
-            fetched = self._fetch(
-                batch.select("url", "parent", "depth", "seq", "score"),
-                n_rows=cfg.batch_size,
-            )
-            if cfg.scorer is not None:
-                fetched = fetched.withColumn(
-                    "score", cfg.scorer.column(F.col("url")).cast("double"))
-            fetched = fetched.persist(StorageLevel.MEMORY_AND_DISK)
-            stat = fetched.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("success").cast("long")).alias("ok"),
-            ).collect()[0]
-            n_batch = int(stat["n"])
-            n_success = int(stat["ok"] or 0)
-            results_s = fetched.withColumn(
-                "superstep", F.lit(superstep)).select(RESULT_COLS)
-            result_parts.append(self._persist_results(results_s, superstep))
-            result_seq_base += n_batch
-            pages_crawled += n_success
-            remaining = cfg.page_budget - pages_crawled
-            pushed = rest
-            links = None
-            if remaining > 0:
-                links = self._discover(
-                    fetched, seen,
-                    remaining_expr=F.lit(remaining),
-                    next_depth_expr=F.col("depth") + 1,
-                    canonicalize=True,
-                    base_seq=0,
-                    est_rows=n_batch * 16,
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                n_links = links.count()
-                if n_links:
-                    # reversal (dfs_strategy.py:57-60, batched): discovery
-                    # seq ascends in (parent pop order, link order), so
-                    # seq 0 gets the HIGHEST new stack_seq and pops next
-                    pushes = links.select(
-                        "url", "parent", "depth",
-                        (F.lit(stack_seq_base + n_links - 1)
-                         - F.col("seq")).alias("stack_seq"),
-                    )
-                    pushed = rest.unionByName(pushes)
-                    stack_seq_base += n_links
-            stack = pushed.localCheckpoint(eager=True)
-            self._log(superstep=superstep, popped=n_batch,
-                      successes=n_success, pages_crawled=pages_crawled)
-            popped.unpersist()
-            batch.unpersist()
-            fetched.unpersist()
-            if links is not None:  # consumed by the stack checkpoint above
-                links.unpersist()
-            superstep += 1
-        return self._finish(result_parts, seen, pages_crawled, order=["seq"])
+    # ----------------------------------------------------------- resume
+    def _restore(self):
+        """Load the last committed snapshot (north_rule checkpoint/resume):
+        manifest → superstep + counters; orphan dirs from a crashed
+        superstep are deleted; returns None when nothing was committed."""
+        if self.store is None:
+            return None
+        mf = self.store.last_commit()
+        if mf is None:
+            return None
+        s = mf["superstep"]
+        self.store.clean_orphans(s)
+        parts = []
+        start = 0
+        comp = self.store.read_compacted(self.spark, "results")
+        if comp is not None:
+            # compaction vacuumed the per-superstep delta dirs it merged;
+            # the compacted snapshot replaces parts 0..upto
+            cdf, upto = comp
+            parts.append(cdf)
+            start = upto + 1
+        for i in range(start, s + 1):
+            parts.append(self.store.read_one(self.spark, "results", i))
+        return {
+            "superstep": s + 1,
+            "frontier": self.store.read_one(self.spark, "frontier", s),
+            "seen": self.store.read_one(self.spark, "seen", s),
+            # a heap/stack superstep that fetched nothing wrote no part
+            "result_parts": [p for p in parts if p is not None],
+            "counters": mf["counters"],
+            # DataFrame (never driver pandas)
+            "domain_state": self.store.read_one(self.spark, "domain_state", s),
+        }
 
     # ---------------------------------------------------------- helpers
-    def run(self, seeds: list[str], resume: bool = False) -> CrawlRun:
+    def _sidecar(self):
+        """The URL-seen prefilter for this run (exact either way)."""
         cfg = self.cfg
-        # DFS is the sequential parity-only path (one URL per superstep) —
-        # a per-pop Bloom fold would just add jobs; scale strategies get
-        # the sidecar.
-        if cfg.bloom_capacity and cfg.strategy != "dfs":
-            if cfg.seen_filter == "cuckoo":
-                from ..operators.seen import CuckooSidecar
+        if not cfg.bloom_capacity:
+            return None
+        if cfg.seen_filter == "cuckoo":
+            from ..operators.seen import CuckooSidecar
 
-                self.bloom = CuckooSidecar(
-                    self.spark, cfg.bloom_capacity, n_shards=cfg.bloom_buckets)
-            else:
-                self.bloom = BloomSidecar(
-                    self.spark, cfg.bloom_capacity, cfg.bloom_fp_rate,
-                    cfg.bloom_buckets)
-        else:
-            self.bloom = None
-        if self.cfg.strategy == "bfs":
-            return self.run_bfs(seeds, resume=resume)
-        if self.cfg.strategy == "best_first":
-            return self.run_best_first(seeds, resume=resume)
-        if self.cfg.strategy == "dfs":
-            return self.run_dfs(seeds)
-        if self.cfg.strategy == "dfs_batched":
-            return self.run_dfs_batched(seeds)
-        raise ValueError(f"unknown strategy {self.cfg.strategy!r}")
+            return CuckooSidecar(
+                self.spark, cfg.bloom_capacity, n_shards=cfg.bloom_buckets)
+        return BloomSidecar(
+            self.spark, cfg.bloom_capacity, cfg.bloom_fp_rate, cfg.bloom_buckets)
 
     def _persist_results(self, results_s: DataFrame, superstep: int) -> DataFrame:
         if self.store is not None:

@@ -78,6 +78,42 @@ def test_best_first_kill_resume(spark, tables, tmp_path):
     assert _rows(resumed) == want
 
 
+def test_dfs_batched_kill_resume(spark, tables, tmp_path):
+    pages_df, links_df = tables
+    seeds = [url_of(0, PARAMS)]
+    cfg_full = CrawlConfig(strategy="dfs_batched", max_depth=2, max_pages=20,
+                           batch_size=4)
+    full = CrawlEngine(spark, pages_df, links_df, cfg_full).run(seeds)
+    want = [(r["superstep"], r["seq"], r["url"], r["depth"], r["parent"],
+             r["success"]) for r in full.results.collect()]
+
+    store = SnapshotStore(str(tmp_path / "ckpt_dfs"))
+    cfg_part = CrawlConfig(strategy="dfs_batched", max_depth=2, max_pages=20,
+                           batch_size=4, max_supersteps=2)
+    CrawlEngine(spark, pages_df, links_df, cfg_part, store=store).run(seeds)
+    assert store.last_commit()["superstep"] == 1
+    resumed = CrawlEngine(spark, pages_df, links_df, cfg_full, store=store).run(
+        seeds, resume=True)
+    got = [(r["superstep"], r["seq"], r["url"], r["depth"], r["parent"],
+            r["success"]) for r in resumed.results.collect()]
+    assert len({r[0] for r in want}) > 2, "crawl ends before the kill point"
+    assert got == want
+    assert {r["url"] for r in resumed.seen.collect()} == {
+        r["url"] for r in full.seen.collect()}
+    assert resumed.pages_crawled == full.pages_crawled
+
+
+@pytest.mark.parametrize("strategy", ["dfs", "dfs_batched"])
+@pytest.mark.parametrize("knob", [{"politeness_budget": 2}, {"backoff": True}])
+def test_dfs_rejects_schedule_knobs(spark, tables, strategy, knob):
+    """No DFS schedule exists for budget deferral or backoff retries, so
+    the engine refuses them instead of crawling unthrottled."""
+    pages_df, links_df = tables
+    cfg = CrawlConfig(strategy=strategy, max_depth=2, **knob)
+    with pytest.raises(ValueError, match="neither politeness_budget nor backoff"):
+        CrawlEngine(spark, pages_df, links_df, cfg).run([url_of(0, PARAMS)])
+
+
 def test_orphan_cleanup(spark, tables, tmp_path):
     pages_df, links_df = tables
     store = SnapshotStore(str(tmp_path / "ckpt2"))

@@ -6,6 +6,8 @@ The oracle executes the reference algorithms verbatim
 the Spark engine must reproduce result sequences (url, depth, parent)
 exactly and, for best-first, the popped scores too."""
 
+from math import inf
+
 import pytest
 
 from crawl4ai_spark.functions.filters import FilterSpec
@@ -136,3 +138,54 @@ def test_dfs_batched_batch1_equals_dfs(spark, spark_tables, oracle_graph):
         oracle_graph, url_of(0, PARAMS), specb)
     assert [r.url for r in strict] == [w["url"] for w in batched]
     assert strict_seen == batched_seen
+
+    # a graph where the stack really branches: with no page budget the two
+    # orders agree row for row; when max_pages binds, strict DFS keeps
+    # draining its stack (fetching, no longer discovering) while the
+    # batched loop stops, so batched is a strict prefix of strict
+    graph = _wide_graph()
+    seed = url_of(0, WIDE)
+    for max_pages, prefix in ((inf, False), (8, True)):
+        strict, strict_seen = crawl(graph, seed, CrawlSpec(
+            strategy="dfs", max_depth=3, max_pages=max_pages))
+        batched, batched_seen = crawl_dfs_batched(graph, seed, CrawlSpec(
+            strategy="dfs_batched", max_depth=3, max_pages=max_pages,
+            batch_size=1))
+        got = [w["url"] for w in batched]
+        want = [r.url for r in strict]
+        assert len(want) > 10
+        if prefix:
+            assert len(got) < len(want) and got == want[: len(got)]
+            assert batched_seen < strict_seen
+        else:
+            assert got == want and batched_seen == strict_seen
+
+
+# second fixture: a 300-page graph whose seed fans out wide enough that the
+# page budget binds mid-stack (the 60-page PARAMS graph stops after 2 rows)
+WIDE = GraphParams(n_pages=300, n_domains=4, mean_degree=5, seed=1)
+
+
+def _wide_graph():
+    pages, links, _ = synth_local(WIDE)
+    return OracleGraph.from_frames(pages, links)
+
+
+def test_dfs_drains_stack_after_page_budget(spark):
+    """Strict DFS keeps popping after max_pages is reached (the reference
+    loop has no budget check at pop), so its result holds rows past the
+    budget; the engine must reproduce them, not stop like dfs_batched."""
+    pages, links, _ = synth_local(WIDE)
+    graph = OracleGraph.from_frames(pages, links)
+    seed = url_of(0, WIDE)
+    spec = CrawlSpec(strategy="dfs", max_depth=3, max_pages=8)
+    want, want_seen = crawl(graph, seed, spec)
+    assert len(want) == 14 and sum(r.success for r in want) > 8
+    run = deep_crawl(spark, [seed], spark.createDataFrame(pages),
+                     spark.createDataFrame(links),
+                     CrawlConfig(strategy="dfs", max_depth=3, max_pages=8))
+    got = [(r["url"], r["depth"], r["parent"], r["success"])
+           for r in run.results.collect()]
+    assert got == [(r.url, r.depth, r.parent, r.success) for r in want]
+    assert {r["url"] for r in run.seen.collect()} == want_seen
+    assert run.pages_crawled == sum(r.success for r in want)

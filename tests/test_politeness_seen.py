@@ -48,6 +48,29 @@ def test_slots_and_budget(spark):
     assert mk["hot.test"] == pytest.approx((len(by_host["hot.test"]) - 1) * 0.5)
 
 
+def test_duplicate_host_delay_keeps_max(spark):
+    """Two dim rows for one host: both slot paths keep the larger delay
+    (the conservative merge) and still give every row exactly one slot."""
+    from crawl4ai_spark.operators.politeness import with_salted_host_slots
+
+    politeness = spark.createDataFrame(
+        [("a.test", 1.0), ("a.test", 3.0), ("b.test", 2.0)],
+        "host string, delay_s double")
+    rows = [(f"https://a.test/p{i}", "a.test", i) for i in range(6)]
+    rows += [(f"https://b.test/p{i}", "b.test", 10 + i) for i in range(3)]
+    df = spark.createDataFrame(rows, "url string, host string, seq long")
+    plain = with_host_slots(df, politeness, order_cols=["seq"]).collect()
+    salted = with_salted_host_slots(
+        df, politeness, order_cols=["seq"], hot_hosts=["a.test"],
+        salt_buckets=4).collect()
+    for out in (plain, salted):
+        assert len(out) == len(rows)
+        delay = {"a.test": 3.0, "b.test": 2.0}
+        for r in out:
+            assert r["send_at_s"] == pytest.approx(r["host_rank"] * delay[r["host"]])
+        assert max(r["send_at_s"] for r in out if r["host"] == "a.test") >= 5 * 3.0
+
+
 def test_backoff_semantics():
     state = pd.DataFrame(columns=["host", "current_delay", "fail_count", "give_up"])
     results = pd.DataFrame(

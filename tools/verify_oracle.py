@@ -4,6 +4,10 @@ Runs every ``queries()`` entry on Spark and, where an ``oracle_sql()`` entry
 exists, the same query in DuckDB over the identical parquet tables; compares
 row count, column-name set, and an order-insensitive value hash (columns
 sorted by name, rows sorted, values stringified with float canonicalization).
+It also fails an oracle column typed HUGEINT, UHUGEINT or DECIMAL whose Spark
+twin is an integer: the real gate fetches such DuckDB columns through pandas as
+float64 (``2.0`` against Spark's ``2``), so the probe fails there even when
+the hashes here agree.  Cast such sums to BIGINT in the oracle.
 
 Usage: python tools/verify_oracle.py [sf_dir] [query ...]
 """
@@ -49,6 +53,21 @@ def frame_hash(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()[:16]
 
 
+_WIDE_TYPES = ("HUGEINT", "UHUGEINT", "DECIMAL")
+_SPARK_INTEGRAL = ("byte", "short", "integer", "long")
+
+
+def wide_integral_columns(sdf_schema, ocols: list[str],
+                          otypes: list[str]) -> list[str]:
+    """Oracle columns of a wide DuckDB numeric type whose Spark twin is an
+    integer column (``col: TYPE``)."""
+    spark_types = {f.name: f.dataType.typeName() for f in sdf_schema.fields}
+    return [
+        f"{c}: {t}" for c, t in zip(ocols, otypes)
+        if t.startswith(_WIDE_TYPES) and spark_types.get(c) in _SPARK_INTEGRAL
+    ]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -91,9 +110,10 @@ def main() -> int:
                 print(f"  WARN {name}: 0 rows")
             continue
         try:
-            cur = con.execute(oracles[name])
-            ocols = [d[0] for d in cur.description]
-            orows = cur.fetchall()
+            rel = con.sql(oracles[name])
+            ocols = rel.columns
+            otypes = [str(t) for t in rel.types]
+            orows = rel.fetchall()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: duckdb error: {e}")
             failures.append(name)
@@ -103,12 +123,16 @@ def main() -> int:
         sh = frame_hash(scols, srows)
         oh = frame_hash(ocols, orows)
         ok_hash = sh == oh
-        status = "OK  " if (ok_cols and ok_count and ok_hash) else "FAIL"
+        wide = wide_integral_columns(sdf.schema, ocols, otypes)
+        ok = ok_cols and ok_count and ok_hash and not wide
+        status = "OK  " if ok else "FAIL"
         print(
             f"{status}  {name}: spark={len(srows)} duck={len(orows)} "
             f"cols={'ok' if ok_cols else f'{sorted(scols)} vs {sorted(ocols)}'} "
             f"hash={'ok' if ok_hash else f'{sh} vs {oh}'} ({spark_s:.1f}s)"
         )
+        if wide:
+            print(f"    wide oracle type vs integral Spark column: {wide}")
         if status == "FAIL":
             failures.append(name)
             if ok_cols and not ok_hash:
